@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .result import local_result
 from .timeutil import timestamp_to_ns
 
 TIME_COL = "time"
@@ -77,7 +78,8 @@ class Measurement:
         """SHOW SERIES: distinct tag combinations (importer.go FetchSeries,
         syncing/series.go:14-29 — `measurement,tag1=v1,...` keys)."""
         if not self.tags:
-            return self.df.sparkSession.createDataFrame([(self.name,)], ["key"])
+            return local_result(self.df.sparkSession, [(self.name,)],
+                                [("key", "STRING")])
         key = F.concat_ws(",", F.lit(self.name), *[
             F.concat_ws("=", F.lit(t), F.col(t)) for t in self.tags])
         return (self.df.select(*self.tags).distinct()
@@ -171,15 +173,17 @@ class Catalog:
         return db_key
 
     # -- SHOW surface (routing.go:121-135 first-available statements) -----
+    # Catalog answers are driver-local rows, so they are VALUES relations
+    # (result.local_result) whose collect launches no Spark job.
     def show_databases(self) -> DataFrame:
-        # explicit schema: [] with list-of-column-names cannot infer types
-        return self.spark.createDataFrame(
-            [(d,) for d in sorted(self.databases)], "name string")
+        return local_result(self.spark, [(d,) for d in sorted(self.databases)],
+                            [("name", "STRING")])
 
     def show_measurements(self, database: str) -> DataFrame:
-        return self.spark.createDataFrame(
+        return local_result(
+            self.spark,
             [(m,) for m in sorted(self.databases.get(database, {}))],
-            "name string")
+            [("name", "STRING")])
 
     def show_tag_keys(self, database: str, measurement: str | None = None) -> DataFrame:
         rows = []
@@ -187,7 +191,8 @@ class Catalog:
             if measurement and name != measurement:
                 continue
             rows += [(name, t) for t in m.tags]
-        return self.spark.createDataFrame(rows or [], "measurement string, tagKey string")
+        return local_result(self.spark, rows,
+                            [("measurement", "STRING"), ("tagKey", "STRING")])
 
     def show_field_keys(self, database: str, measurement: str | None = None) -> DataFrame:
         rows = []
@@ -196,8 +201,9 @@ class Catalog:
                 continue
             dtypes = dict(m.df.dtypes)
             rows += [(name, f, dtypes.get(f, "unknown")) for f in m.fields]
-        return self.spark.createDataFrame(
-            rows or [], "measurement string, fieldKey string, fieldType string")
+        return local_result(self.spark, rows,
+                            [("measurement", "STRING"), ("fieldKey", "STRING"),
+                             ("fieldType", "STRING")])
 
     def show_tag_values(self, database: str, measurement: str, tag: str) -> DataFrame:
         m = self.get(database, measurement)
@@ -209,7 +215,7 @@ class Catalog:
                sorted(self.databases.get(database, {}).items())
                if measurement is None or name == measurement]
         if not dfs:
-            return self.spark.createDataFrame([], "key string")
+            return local_result(self.spark, [], [("key", "STRING")])
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -34,6 +34,7 @@ from .influxql.ast import (BinaryExpr, Call, DurationLit, IntegerLit,
                            NumberLit, RegexLit, SelectField, SelectStatement,
                            SourceList, StringLit, SubQuery, VarRef, Wildcard)
 from .model import Catalog, Measurement, TIME_COL
+from .result import local_result
 from .timeutil import parse_time_literal_ns, time_bucket, time_bucket_tz
 
 TRANSFORMS = {"derivative", "non_negative_derivative", "difference",
@@ -107,10 +108,10 @@ class Planner:
             # selected field does not exist in the measurement
             names = [f.alias or self._default_name(f.expr)
                      for f in stmt.fields]
-            schema = ", ".join([f"`{TIME_COL}` long"] +
-                               [f"`{n}` double" for n in names
-                                if n != TIME_COL])
-            return df.sparkSession.createDataFrame([], schema)
+            return local_result(df.sparkSession, [],
+                                [(TIME_COL, "BIGINT")] +
+                                [(n, "DOUBLE") for n in names
+                                 if n != TIME_COL])
         calls = self._find_calls(stmt)
 
         if not calls:

@@ -42,6 +42,15 @@ _DEFAULTS = {
     # cold query build; error messages lose the user line number, which an
     # engine's internal plans never surface anyway)
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated classes are cached JVM-wide in an LRU of 100 entries by
+    # default. The 12-statement serving dashboard mix generates 132 classes
+    # per cycle, and a cyclic working set larger than an LRU never hits, so
+    # at 100 every cycle recompiled 101 of them (and the six analytics keys
+    # about 75 per warm pass). 256 leaves 2x headroom; SCALE.md has the
+    # counts. Only statements repeated with identical literals profit: long
+    # literals are inlined into the generated Java, so a now()-shifted
+    # window compiles fresh classes whatever the cache size.
+    "spark.sql.codegen.cache.maxEntries": "256",
 }
 
 

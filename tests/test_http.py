@@ -276,3 +276,71 @@ def test_routing_parity_rejected_vs_added(http):
              urllib.request.quote("KILL QUERY 424242"))
     assert e.value.code == 400
     assert "no such query id" in json.loads(e.value.read())["error"]
+
+
+JAN1_NS = 1_704_067_200_000_000_000  # 2024-01-01, the events table's start
+DAY_NS = 86_400_000_000_000
+
+
+def _dashboard_mix() -> list[tuple[str, dict]]:
+    """The 12 statement shapes of the serving dashboard mix, with fixed
+    windows sized to the sf0.001 events table (about 33 points a day)."""
+    def win(day, days):
+        t0 = JAN1_NS + day * DAY_NS
+        return f"time >= {t0} AND time < {t0 + days * DAY_NS}"
+    return [
+        ("SELECT mean(value) AS mean_value, count(value) AS n FROM events "
+         f"WHERE {win(3, 1)} GROUP BY time(1h), event_type", {}),
+        ("SELECT mean(value) AS mv FROM events WHERE "
+         f"{win(5, 2)} AND event_type = 'click' GROUP BY time(2h) "
+         "fill(linear)", {}),
+        ("SELECT sum(value) AS sv FROM events WHERE "
+         f"{win(8, 2)} AND event_type = 'view' GROUP BY time(3h) "
+         "fill(previous)", {}),
+        ("SELECT count(value) AS n FROM events "
+         f"WHERE {win(11, 1)} GROUP BY time(1h), event_type fill(0)", {}),
+        ("SELECT top(value, 5) AS top_value FROM events "
+         f"WHERE {win(13, 2)} GROUP BY event_type", {}),
+        ("SELECT count(distinct(user_id)) AS u FROM events "
+         f"WHERE {win(15, 7)} GROUP BY event_type", {}),
+        ("SELECT max(c) AS max_hourly, min(c) AS min_hourly FROM "
+         "(SELECT count(value) AS c FROM events "
+         f"WHERE {win(20, 3)} GROUP BY time(1h), event_type fill(none)) "
+         "GROUP BY event_type", {}),
+        ("SELECT value, event_id FROM events WHERE event_type = 'click' "
+         f"AND {win(4, 2)} ORDER BY time DESC LIMIT 50", {}),
+        (f"SELECT * FROM events WHERE {win(24, 1)}",
+         {"epoch": "ns", "chunked": "true", "chunk_size": "10"}),
+        ("SHOW TAG VALUES FROM events WITH KEY = event_type", {}),
+        ("SHOW SERIES FROM events", {}),
+        ("SHOW MEASUREMENTS", {}),
+    ]
+
+
+def test_dashboard_mix_compiles_once(spark):
+    """A repeated dashboard statement must hit Spark's generated-code
+    cache: the second pass over the mix compiles no class. With the
+    cache at Spark's default of 100 entries, the mix's working set
+    evicts itself and every pass recompiles."""
+    import urllib.parse
+
+    from influxdb_ha_spark.model import events_measurement
+
+    cat, _ = events_measurement(spark, "/root/testdata/sf0.001")
+    srv, port = serve(Engine(cat, database="default"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    try:
+        counts = []
+        for _ in range(2):
+            before = compiles.getCount()
+            for q, params in _dashboard_mix():
+                status, _, body = _get(
+                    f"http://127.0.0.1:{port}/query?" +
+                    urllib.parse.urlencode({"db": "default", "q": q,
+                                            **params}))
+                assert status == 200 and b'"error":' not in body, q
+            counts.append(compiles.getCount() - before)
+    finally:
+        srv.shutdown()
+    assert counts[0] > 0 and counts[1] == 0, counts

@@ -5,10 +5,16 @@ query text (SHOW QUERIES embeds user-supplied statements verbatim)."""
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from influxdb_ha_spark.model import Catalog, PartitionKey
 from influxdb_ha_spark.result import local_result
+from influxdb_ha_spark.server import Engine
 
 SCHEMA = [("s", "STRING"), ("d", "DOUBLE"), ("i", "BIGINT"),
           ("b", "BOOLEAN")]
@@ -48,9 +54,85 @@ def test_local_result_injection_shapes(spark):
     assert empty.columns == ["s", "d", "i", "b"] and empty.collect() == []
 
 
+def _job_ids(spark, fn) -> list[int]:
+    """Spark job ids launched by `fn()`, read from the status tracker under
+    a fresh job group."""
+    sc = spark.sparkContext
+    group = f"job-free-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-freedom probe")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_local_result_is_job_free(spark):
-    """The plan must be a LocalTableScan (executeCollect, no job) — the
-    liveness property SHOW QUERIES/KILL QUERY depend on under load."""
-    df = local_result(spark, [("q", 0.1, 1, True)], SCHEMA)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "Exchange" not in plan
+    """Collect launches no Spark job — the liveness property SHOW
+    QUERIES/KILL QUERY depend on under load. The probe itself is checked
+    against createDataFrame, whose collect does run a job."""
+    rows = [("q", 0.1, 1, True), ("r", None, 2, False)]
+    df = local_result(spark, rows, SCHEMA)
+    assert _job_ids(spark, df.collect) == []
+    assert _job_ids(spark, df.where(F.col("s").rlike("^q")).collect) == []
+    assert _job_ids(spark, df.offset(1).limit(1).collect) == []
+    assert _job_ids(spark, local_result(spark, [], SCHEMA).collect) == []
+    parallelized = spark.createDataFrame(
+        rows, "s string, d double, i bigint, b boolean")
+    assert _job_ids(spark, parallelized.collect) != []
+
+
+@pytest.fixture(scope="module")
+def meta_engine(spark):
+    cat = Catalog(spark)
+    cat.register_dataframe(
+        "default", "cpu",
+        local_result(spark, [(1, "a", 1.0)],
+                     [("time", "BIGINT"), ("host", "STRING"),
+                      ("value", "DOUBLE")]),
+        time_col="time", tags=["host"])
+    cat.register_dataframe(
+        "default", "up",
+        local_result(spark, [(1, 1.0)],
+                     [("time", "BIGINT"), ("value", "DOUBLE")]),
+        time_col="time", tags=[])
+    cat.databases["empty"] = {}
+    cat.partition_keys.append(PartitionKey("default", "cpu", ["host"]))
+    engine = Engine(cat, database="default")
+    engine.admin.create_user("root", "pw", admin=True)
+    return engine
+
+
+@pytest.mark.parametrize("q", [
+    "SHOW DATABASES",
+    "SHOW MEASUREMENTS",
+    "SHOW MEASUREMENTS WITH MEASUREMENT =~ /^c/",
+    "SHOW MEASUREMENTS LIMIT 1 OFFSET 1",
+    "SHOW MEASUREMENTS ON empty",
+    "SHOW TAG KEYS",
+    "SHOW FIELD KEYS",
+    "SHOW SERIES ON empty",
+    "SHOW SERIES FROM up",
+    "SELECT nosuchfield FROM cpu",
+    "SHOW PARTITION KEYS",
+    "SHOW REPLICATION FACTORS",
+    "SET REPLICATION FACTOR 3 ON default",
+    "SHOW NODES",
+    "REMOVE NODE n1",
+    "SHOW USERS",
+])
+def test_meta_statements_are_job_free(meta_engine, q):
+    """Meta statements answer from driver-local state: building and
+    collecting their result launches no Spark job."""
+    spark = meta_engine.catalog.spark
+    assert _job_ids(spark, lambda: meta_engine.query_df(q).collect()) == []
+
+
+def test_backup_summary_is_job_free(meta_engine, tmp_path):
+    """BACKUP's export runs jobs; the summary it returns does not."""
+    spark = meta_engine.catalog.spark
+    summary = meta_engine.query_df(f"BACKUP default.up TO {tmp_path}")
+    rows = []
+    assert _job_ids(spark, lambda: rows.extend(summary.collect())) == []
+    assert [(r["measurement"], r["partitioned_by"]) for r in rows] == \
+        [("up", "")]
