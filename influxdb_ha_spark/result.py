@@ -35,6 +35,12 @@ def _sql_lit(v, typ: str) -> str:
     raise ValueError(f"unsupported local-result type: {typ}")
 
 
+def _sql_ident(name: str) -> str:
+    # a backtick inside a quoted identifier is written as two backticks;
+    # column names can come from the query (field names, aliases)
+    return "`" + str(name).replace("`", "``") + "`"
+
+
 def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
     """Driver-local rows as a VALUES LocalRelation DataFrame.
 
@@ -50,11 +56,13 @@ def local_result(spark, rows, schema: list[tuple[str, str]]) -> DataFrame:
 
     `schema` is [(column_name, SQL type)] with types in
     {STRING, DOUBLE, BIGINT, BOOLEAN}; values are embedded as escaped SQL
-    literals (bounded meta results only — never row data).
+    literals (bounded meta results only — never row data) and column names
+    as escaped quoted identifiers.
     """
-    names = ", ".join(f"`{n}`" for n, _ in schema)
+    names = ", ".join(_sql_ident(n) for n, _ in schema)
     if not rows:
-        cols = ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in schema)
+        cols = ", ".join(f"CAST(NULL AS {t}) AS {_sql_ident(n)}"
+                         for n, t in schema)
         return spark.sql(f"SELECT {cols} WHERE 1=0")
     vals = ", ".join(
         "(" + ", ".join(_sql_lit(v, t)

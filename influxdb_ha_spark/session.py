@@ -49,7 +49,8 @@ _DEFAULTS = {
     # about 75 per warm pass). 256 leaves 2x headroom; SCALE.md has the
     # counts. Only statements repeated with identical literals profit: long
     # literals are inlined into the generated Java, so a now()-shifted
-    # window compiles fresh classes whatever the cache size.
+    # window compiles fresh classes whatever the cache size; neither the
+    # gain nor the memory cost has been measured on such traffic (SCALE.md).
     "spark.sql.codegen.cache.maxEntries": "256",
 }
 

@@ -326,6 +326,11 @@ def test_dashboard_mix_compiles_once(spark):
 
     from influxdb_ha_spark.model import events_measurement
 
+    # the compile counter is JVM-wide: a streaming query left running by
+    # an earlier test would compile in the measured pass too
+    for leaked in spark.streams.active:
+        leaked.stop()
+    assert spark.streams.active == [], "streaming queries still active"
     cat, _ = events_measurement(spark, "/root/testdata/sf0.001")
     srv, port = serve(Engine(cat, database="default"))
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \

@@ -39,6 +39,21 @@ def test_local_result_roundtrip(spark, rows):
     assert [tuple(r) for r in got] == [tuple(r) for r in rows]
 
 
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(names=st.lists(nasty, min_size=1, max_size=3,
+                      unique_by=str.lower),
+       empty=st.booleans())
+def test_local_result_column_names(spark, names, empty):
+    """Column names may come from the query (field names, aliases): any
+    text, backticks included, is a name and never SQL."""
+    schema = [(n, "BIGINT") for n in names]
+    rows = [] if empty else [tuple(range(len(names)))]
+    df = local_result(spark, rows, schema)
+    assert df.columns == names
+    assert [tuple(r) for r in df.collect()] == rows
+
+
 def test_local_result_injection_shapes(spark):
     """The classic breakers: quotes, backslashes, newlines, SQL syntax."""
     rows = [
@@ -52,6 +67,11 @@ def test_local_result_injection_shapes(spark):
     # empty result keeps schema and stays collectable
     empty = local_result(spark, [], SCHEMA)
     assert empty.columns == ["s", "d", "i", "b"] and empty.collect() == []
+    payload = "x` UNION ALL SELECT 0L, 1L --"
+    for rows in ([], [(7,)]):
+        df = local_result(spark, rows, [(payload, "BIGINT")])
+        assert df.columns == [payload]
+        assert [tuple(r) for r in df.collect()] == rows
 
 
 def _job_ids(spark, fn) -> list[int]:
@@ -136,3 +156,14 @@ def test_backup_summary_is_job_free(meta_engine, tmp_path):
     assert _job_ids(spark, lambda: rows.extend(summary.collect())) == []
     assert [(r["measurement"], r["partitioned_by"]) for r in rows] == \
         [("up", "")]
+
+
+def test_unknown_field_name_is_not_sql(meta_engine):
+    """An unknown field answers an empty result named after the field, even
+    when the name is crafted to close the identifier and append a query."""
+    name = "x` UNION ALL SELECT 0L, 1.0D --"
+    df = meta_engine.query_df(f'SELECT "{name}" FROM cpu')
+    assert df.columns == ["time", name]
+    assert df.collect() == []
+    assert meta_engine.query(f'SELECT "{name}" FROM cpu') == \
+        {"results": [{"statement_id": 0, "series": []}]}
